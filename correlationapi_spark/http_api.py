@@ -91,7 +91,7 @@ container, and none is needed for a JSON-for-JSON contract:
   POST /index/recover {"path"}  → reclaim retired/orphan store objects
          now (round 14: nothing needs a roll-forward anymore;
          recovered=false when there was nothing to reclaim)
-  POST /psi/repin {"dataset","time","value","path"[,"start","end","bins"]}
+  POST /psi/repin {"dataset","time","value","path","end"[,"start"]}
        → pin/rotate a versioned PSI reference over any window
   GET  /psi/status?path=          → the live PSI reference pin
   GET  /psi/drift?dataset=&time=&value=&path=  → per-window PSI vs pin
@@ -132,21 +132,32 @@ container, and none is needed for a JSON-for-JSON contract:
 
 Error mapping at the HTTP boundary: KeyError → 404 (unknown dataset /
 variable), ValueError|TypeError → 400 (bad method / grain / non-numeric
-column), anything else → 500 with the exception class name. Every
+column), anything else → 500 with the exception class name; a malformed
+Content-Length or a body that is not a JSON object → 400. Every
 response body is one JSON document.
 
 Mutation guard (round 12): the routes that change server or on-disk
-state — dataset registration, /index/{build,append,delete,compact,
-recluster,pq_attach}, /psi/repin — are gated behind a shared token. With no
-token configured the server is READ-ONLY: those routes answer 403 and
-name the knob to turn. With ``auth_token`` set (``serve --auth-token``
-or the CORRELATIONAPI_AUTH_TOKEN env var), a mutating request must
-carry it in ``Authorization: Bearer <token>`` (or ``X-Auth-Token``);
-a missing or wrong token answers 401 + WWW-Authenticate. Read routes
-stay open — they expose only registered datasets, and the compare is
-constant-time (hmac.compare_digest). POST alone is NOT the mutation
-signal: /matrix, /mixed_matrix, /similar and /index/probe are pure
-reads that ride POST for their body payloads.
+state are gated behind a shared token: dataset registration
+(POST /datasets/{name}), /index/build, /index/append, /index/delete,
+/index/compact, /index/recluster, /index/recover, /index/pq_attach,
+/psi/repin, /scd2/merge and /scd2/recover (the ``mutates`` entries of
+ROUTES). With no token configured the server is READ-ONLY: those routes
+answer 403 and name the knob to turn. With ``auth_token`` set (``serve
+--auth-token`` or the CORRELATIONAPI_AUTH_TOKEN env var), a mutating
+request must carry it in ``Authorization: Bearer <token>`` (or
+``X-Auth-Token``); a missing or wrong token answers 401 +
+WWW-Authenticate. Read routes stay open — they expose only registered
+datasets, and the compare is constant-time (hmac.compare_digest). POST
+alone is NOT the mutation signal: /matrix, /mixed_matrix, /similar,
+/index/probe and /scd2/snapshot are pure reads that ride POST for their
+body payloads.
+
+Routing is one table, ROUTES: each entry names the CorrelationAPI
+method, the wire names that differ from its parameter names, whether
+it mutates, and a non-200 success status. Parameter types, defaults
+and required-ness come from the method signatures themselves, read
+once at import. GET routes bind the query string, POST routes the JSON
+body; the CLI (``__main__``) builds its subcommands from the same table.
 
 Scale note: the handler threads share ONE SparkSession — Spark sessions
 are thread-safe and each request is a short driver-side job submission;
@@ -157,36 +168,178 @@ queries from blocking /health.
 from __future__ import annotations
 
 import hmac
+import inspect
 import json
 import os
 import re
+import typing
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any, Mapping
+from typing import Any, Mapping, NamedTuple
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import SparkSession
 
-from .api import CorrelationAPI
+from .api import CorrelationAPI, parse_control_arg
 
 _DATASET_RE = re.compile(r"^/datasets/([A-Za-z0-9_.-]+)$")
 _VARIABLES_RE = re.compile(r"^/datasets/([A-Za-z0-9_.-]+)/variables$")
 
-# Routes that mutate server or on-disk state. Everything else —
-# including the POST-carrying pure reads (/matrix, /mixed_matrix,
-# /similar, /index/probe) — stays open.
-_MUTATING_PATHS = frozenset({
-    "/index/build", "/index/append", "/index/delete",
-    "/index/compact", "/index/recluster", "/index/recover",
-    "/index/pq_attach",
-    "/psi/repin", "/scd2/merge", "/scd2/recover",
-})
+
+class Route(NamedTuple):
+    """One service call: ``method path`` → ``CorrelationAPI.<call>``."""
+
+    method: str
+    path: str
+    call: str
+    wire: Mapping[str, str] = {}  # wire name → parameter name, where they differ
+    mutates: bool = False
+    status: int = 200  # a 201 route answers 200 when its result says "rebuilt"
+    need: tuple[str, ...] = ()  # wire names required beyond the signature
+
+
+_VEC = {"id": "id_col", "vector": "vector_col"}
+_DOC = {"id": "id_col", "text": "text_col"}
+_SERIES = {"time": "time_col", "value": "value_col"}
+_XY = {"x": "var_x", "y": "var_y"}
+_AB = {"a": "group_a", "b": "group_b"}
+
+ROUTES = (
+    Route("GET", "/correlate", "correlate", _XY),
+    Route("GET", "/association", "association", {"a": "var_a", "b": "var_b"}),
+    Route("GET", "/distribution", "distribution"),
+    Route("GET", "/compare", "compare", _AB),
+    Route("GET", "/anova", "anova"),
+    Route("GET", "/tukey", "tukey"),
+    Route("GET", "/integrity", "integrity"),
+    Route("GET", "/basket", "basket"),
+    Route("GET", "/changepoint", "changepoint"),
+    Route("GET", "/trend", "trend"),
+    Route("GET", "/decompose", "decompose"),
+    Route("GET", "/weighted_quantile", "weighted_quantile"),
+    Route("GET", "/gopher", "gopher", _DOC),
+    Route("GET", "/forecast", "forecast"),
+    Route("GET", "/knn_graph", "knn_graph", _VEC),
+    Route("GET", "/pca", "pca", {"id": "id_col"}),
+    Route("GET", "/drift", "drift", {"time": "time_col"}),
+    Route("POST", "/mixed_matrix", "mixed_matrix"),
+    Route("GET", "/survival", "survival", _AB),
+    Route("POST", "/matrix", "correlation_matrix"),
+    Route("GET", "/lagged", "lagged_correlation", _SERIES),
+    Route("GET", "/rolling", "rolling_correlation", _SERIES),
+    Route("GET", "/xcorr", "cross_correlation", {"time": "time_col", **_XY}),
+    Route("GET", "/acf", "acf", _SERIES),
+    Route("GET", "/partial", "partial_correlation", _XY),
+    Route("GET", "/similar", "similar", {**_VEC, "probes": "probe_ids"},
+          need=("probes",)),
+    Route("POST", "/similar", "similar", _VEC, need=("query_vectors",)),
+    Route("POST", "/index/build", "index_build", _VEC, mutates=True,
+          status=201),
+    Route("POST", "/index/append", "index_append", _VEC, mutates=True),
+    Route("GET", "/index/status", "index_status"),
+    Route("POST", "/index/probe", "index_probe"),
+    Route("POST", "/index/pq_attach", "index_pq_attach", mutates=True),
+    Route("POST", "/index/delete", "index_delete", mutates=True),
+    Route("POST", "/index/compact", "index_compact", mutates=True),
+    Route("POST", "/index/recluster", "index_recluster", mutates=True),
+    Route("POST", "/index/recover", "index_recover", mutates=True),
+    Route("POST", "/psi/repin", "psi_repin", _SERIES, mutates=True,
+          status=201),
+    Route("GET", "/psi/status", "psi_status"),
+    Route("GET", "/psi/drift", "psi_drift", _SERIES),
+    Route("POST", "/scd2/merge", "scd2_merge", {
+        "user": "user_col", "event": "event_col", "time": "time_col",
+        "order": "order_col"}, mutates=True),
+    Route("POST", "/scd2/recover", "scd2_recover_store", mutates=True),
+    Route("POST", "/scd2/snapshot", "scd2_snapshot"),
+    Route("GET", "/dedup", "dedup", _DOC),
+    Route("GET", "/assign", "assign", {**_VEC, "centroids": "centroid_ids"}),
+    Route("GET", "/kmeans", "kmeans",
+          {**_VEC, "centroids": "include_centroids"}),
+    Route("GET", "/transitions", "transitions"),
+    Route("GET", "/stationary", "stationary"),
+    Route("GET", "/attribution", "attribution"),
+    Route("GET", "/attribution_multi", "attribution_multi"),
+    Route("GET", "/bpe", "bpe_train", _DOC),
+    Route("GET", "/pagerank", "pagerank"),
+    Route("GET", "/pack", "pack", _DOC),
+)
+_TABLE = {(r.method, r.path): r for r in ROUTES}
+
+
+def _signature(call: str) -> list[tuple[str, Any, Any]]:
+    """(name, annotation, default) per parameter of CorrelationAPI.<call>,
+    read from the CLASS: the served object may be a proxy with no real
+    signature."""
+    fn = getattr(CorrelationAPI, call)
+    hints = typing.get_type_hints(fn)
+    return [
+        (p.name, hints.get(p.name, Any), p.default)
+        for p in list(inspect.signature(fn).parameters.values())[1:]
+    ]
+
+
+_SIGNATURES = {r.call: _signature(r.call) for r in ROUTES}
+
+
+def params(route: Route) -> list[tuple[str, str, Any, Any]]:
+    """(parameter, wire name, annotation, default) of one route."""
+    wire = {p: w for w, p in route.wire.items()}
+    return [(n, wire.get(n, n), h, d) for n, h, d in _SIGNATURES[route.call]]
+
+
+def _missing(method: str, wire: str) -> ValueError:
+    if method == "GET":
+        return ValueError(f"missing query parameter {wire!r}")
+    return ValueError(f'body must contain "{wire}"')
+
+
+def _coerce(value: Any, hint: Any, text: bool) -> Any:
+    """Convert one wire value to ``hint``. ``text`` values (query string,
+    CLI) split comma lists; JSON-body lists must already be lists."""
+    args = typing.get_args(hint)
+    if type(None) in args:
+        if value is None:
+            return None
+        (hint,) = [a for a in args if a is not type(None)]
+    if hint == str | list[str]:
+        return parse_control_arg(value)
+    if hint is list or typing.get_origin(hint) is list:
+        if text and isinstance(value, str):
+            value = [v.strip() for v in value.split(",") if v.strip()]
+        elif not isinstance(value, list):
+            raise ValueError("expected a JSON array")
+        (item,) = typing.get_args(hint) or (Any,)
+        return [_coerce(v, item, text) for v in value]
+    if hint is bool:
+        if isinstance(value, str):
+            return value.lower() in ("1", "true", "yes")
+        return bool(value)
+    if hint in (int, float):
+        return hint(value)
+    return value
+
+
+def bind(route: Route, given: Mapping[str, Any], text: bool) -> dict[str, Any]:
+    """Keyword arguments for ``route.call`` from wire-named ``given``
+    values; a missing required parameter raises today's 400 message."""
+    kwargs = {}
+    for name, wire, hint, default in params(route):
+        if wire in given:
+            try:
+                kwargs[name] = _coerce(given[wire], hint, text)
+            except (TypeError, ValueError) as e:
+                raise ValueError(f"{wire}: {e}") from None
+        elif default is inspect.Parameter.empty or wire in route.need:
+            raise _missing(route.method, wire)
+    return kwargs
 
 
 def _is_mutation(method: str, path: str) -> bool:
     """True when (method, path) would change server or persisted state."""
-    if method != "POST":
-        return False
-    return path in _MUTATING_PATHS or _DATASET_RE.match(path) is not None
+    route = _TABLE.get((method, path))
+    if route is not None:
+        return route.mutates
+    return method == "POST" and _DATASET_RE.match(path) is not None
 
 
 def _presented_token(headers: Mapping[str, str]) -> str | None:
@@ -239,481 +392,18 @@ def _route(api: CorrelationAPI, method: str, path: str,
     m = _DATASET_RE.match(path)
     if method == "POST" and m:
         if "path" not in body:
-            raise ValueError('body must contain "path"')
+            raise _missing(method, "path")
         return 201, api.register_dataset(
             m.group(1), body["path"], fmt=body.get("format", "parquet")
         )
-    if method == "GET" and path == "/correlate":
-        for req in ("dataset", "x", "y"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.correlate(
-            query["dataset"], query["x"], query["y"],
-            method=query.get("method", "pearson"),
-            group_by=query.get("group_by"),
-        )
-    if method == "GET" and path == "/association":
-        for req in ("dataset", "a", "b"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.association(
-            query["dataset"], query["a"], query["b"],
-            method=query.get("method", "cramer"),
-        )
-    if method == "GET" and path == "/compare":
-        for req in ("dataset", "var", "group_by", "a", "b"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.compare(
-            query["dataset"], query["var"], query["group_by"],
-            query["a"], query["b"],
-        )
-    if method == "GET" and path == "/anova":
-        for req in ("dataset", "var", "group_by"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.anova(
-            query["dataset"], query["var"], query["group_by"],
-            center=query.get("center", "mean"),
-        )
-    if method == "GET" and path == "/tukey":
-        for req in ("dataset", "var", "group_by"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.tukey(
-            query["dataset"], query["var"], query["group_by"],
-        )
-    if method == "GET" and path == "/integrity":
-        for req in ("child", "fk", "parent", "pk"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.integrity(
-            query["child"], query["fk"], query["parent"], query["pk"],
-        )
-    if method == "GET" and path == "/basket":
-        for req in ("dataset", "basket", "item"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.basket(
-            query["dataset"], query["basket"], query["item"],
-            min_count=int(query.get("min_count", "10")),
-            limit=int(query.get("limit", "50")),
-        )
-    if method == "GET" and path == "/changepoint":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.changepoint(
-            query["dataset"], query["var"], query["time"],
-            grain=query.get("grain", "day"),
-        )
-    if method == "GET" and path == "/forecast":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.forecast(
-            query["dataset"], query["var"], query["time"],
-            group_by=query.get("group_by"),
-            grain=query.get("grain", "day"),
-            method=query.get("method", "holt"),
-            season=int(query.get("season", "7")),
-            alpha=float(query.get("alpha", "0.3")),
-            beta=float(query.get("beta", "0.1")),
-            gamma=float(query.get("gamma", "0.2")),
-        )
-    if method == "GET" and path == "/trend":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.trend(
-            query["dataset"], query["var"], query["time"],
-            group_by=query.get("group_by"),
-            grain=query.get("grain", "day"),
-        )
-    if method == "GET" and path == "/decompose":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.decompose(
-            query["dataset"], query["var"], query["time"],
-            grain=query.get("grain", "day"),
-            period=int(query.get("period", "7")),
-        )
-    if method == "GET" and path == "/weighted_quantile":
-        for req in ("dataset", "var", "weight"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.weighted_quantile(
-            query["dataset"], query["var"], query["weight"],
-            group_by=query.get("group_by"),
-            quantiles=query.get("quantiles", "0.25,0.5,0.75"),
-        )
-    if method == "GET" and path == "/gopher":
-        if "dataset" not in query:
-            raise ValueError("missing query parameter 'dataset'")
-        return 200, api.gopher(
-            query["dataset"],
-            id_col=query.get("id", "doc_id"),
-            text_col=query.get("text", "text"),
-            limit=int(query.get("limit", "100")),
-        )
-    if method == "GET" and path == "/pca":
-        for req in ("dataset", "id", "vector"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.pca(
-            query["dataset"], query["id"], query["vector"],
-            k=int(query.get("k", "8")),
-        )
-    if method == "GET" and path == "/survival":
-        for req in ("dataset", "start", "end"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.survival(
-            query["dataset"], query["start"], query["end"],
-            group_by=query.get("group_by"),
-            group_a=query.get("a"), group_b=query.get("b"),
-        )
-    if method == "GET" and path == "/drift":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.drift(
-            query["dataset"], query["var"], query["time"],
-            grain=query.get("grain", "day"),
-        )
-    if method == "GET" and path == "/distribution":
-        for req in ("dataset", "var"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.distribution(
-            query["dataset"], query["var"],
-            group_by=query.get("group_by"),
-            gini=query.get("gini", "") in ("1", "true", "yes"),
-            percentiles=(
-                [float(x) for x in query["percentiles"].split(",") if x]
-                if "percentiles" in query else None
-            ),
-            method=query.get("method", "exact"),
-            normality=query.get("normality", "") in ("1", "true", "yes"),
-        )
-    if method == "POST" and path == "/matrix":
-        if "dataset" not in body:
-            raise ValueError('body must contain "dataset"')
-        return 200, api.correlation_matrix(
-            body["dataset"], body.get("variables"),
-            method=body.get("method", "pearson"),
-        )
-    if method == "POST" and path == "/mixed_matrix":
-        if "dataset" not in body:
-            raise ValueError('body must contain "dataset"')
-        return 200, api.mixed_matrix(body["dataset"], body.get("variables"))
-    if method == "GET" and path == "/lagged":
-        for req in ("dataset", "time", "value"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.lagged_correlation(
-            query["dataset"], query["time"], query["value"],
-            lag=int(query.get("lag", 1)), grain=query.get("grain", "day"),
-            fill_gaps=query.get("fill_gaps", "").lower() in ("1", "true"),
-        )
-    if method == "GET" and path == "/rolling":
-        for req in ("dataset", "time", "value"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.rolling_correlation(
-            query["dataset"], query["time"], query["value"],
-            window=int(query.get("window", 14)),
-            lag=int(query.get("lag", 1)), grain=query.get("grain", "day"),
-            fill_gaps=query.get("fill_gaps", "").lower() in ("1", "true"),
-        )
-    if method == "GET" and path == "/partial":
-        for req in ("dataset", "x", "y", "control"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        from .api import parse_control_arg
-
-        return 200, api.partial_correlation(
-            query["dataset"], query["x"], query["y"],
-            parse_control_arg(query["control"]),
-            group_by=query.get("group_by"),
-        )
-    if method == "GET" and path == "/acf":
-        for req in ("dataset", "time", "value"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.acf(
-            query["dataset"], query["time"], query["value"],
-            max_lag=int(query.get("max_lag", 10)),
-            grain=query.get("grain", "day"),
-            fill_gaps=query.get("fill_gaps", "").lower() in ("1", "true"),
-        )
-    if method == "GET" and path == "/similar":
-        for req in ("dataset", "id", "vector", "probes"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        try:
-            probe_ids = [int(p) for p in query["probes"].split(",") if p.strip()]
-        except ValueError:
-            raise ValueError("probes must be comma-separated integers") from None
-        return 200, api.similar(
-            query["dataset"], query["id"], query["vector"], probe_ids,
-            k=int(query.get("k", 5)),
-            method=query.get("method", "exact"),
-            n_cells=int(query.get("n_cells", 16)),
-            n_probe=int(query.get("n_probe", 6)),
-        )
-    if method == "POST" and path == "/similar":
-        # raw query vectors don't fit a query string: POST body
-        # {"dataset","id","vector","query_vectors":[[...],...],
-        #  "k","method","n_cells","n_probe"}
-        for req in ("dataset", "id", "vector", "query_vectors"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 200, api.similar(
-            body["dataset"], body["id"], body["vector"],
-            k=int(body.get("k", 5)),
-            method=body.get("method", "exact"),
-            n_cells=int(body.get("n_cells", 16)),
-            n_probe=int(body.get("n_probe", 6)),
-            query_vectors=body["query_vectors"],
-        )
-    if method == "POST" and path == "/index/build":
-        for req in ("dataset", "id", "vector", "path"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        res = api.index_build(
-            body["dataset"], body["id"], body["vector"], body["path"],
-            n_cells=int(body.get("n_cells", 16)),
-            train_fraction=float(body.get("train_fraction", 1.0)),
-            where=body.get("where"),
-        )
-        # 201 on first build, 200 when an existing index was replaced
-        # in place (advice r10)
-        return (200 if res.get("rebuilt") else 201), res
-    if method == "POST" and path == "/index/append":
-        for req in ("dataset", "id", "vector", "path"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 200, api.index_append(
-            body["dataset"], body["id"], body["vector"], body["path"],
-            where=body.get("where"),
-        )
-    if method == "GET" and path == "/index/status":
-        if "path" not in query:
-            raise ValueError("missing query parameter 'path'")
-        return 200, api.index_status(query["path"])
-    if method == "POST" and path == "/index/probe":
-        for req in ("path", "probe_ids"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 200, api.index_probe(
-            body["path"], [int(p) for p in body["probe_ids"]],
-            k=int(body.get("k", 5)), n_probe=int(body.get("n_probe", 6)),
-            method=str(body.get("method", "ivf")),
-            refine=(
-                None if body.get("refine") is None
-                else int(body["refine"])
-            ),
-        )
-    if method == "POST" and path == "/index/delete":
-        for req in ("path", "ids"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 200, api.index_delete(
-            body["path"], [int(i) for i in body["ids"]]
-        )
-    if method == "POST" and path == "/index/compact":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.index_compact(body["path"])
-    if method == "POST" and path == "/index/pq_attach":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.index_pq_attach(body["path"])
-    if method == "POST" and path == "/index/recover":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.index_recover(body["path"])
-    if method == "POST" and path == "/scd2/merge":
-        for req in ("dataset", "user", "event", "time", "order", "path"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        nb = body.get("n_buckets")
-        return 200, api.scd2_merge(
-            body["dataset"], body["user"], body["event"], body["time"],
-            body["order"], body["path"],
-            n_buckets=None if nb is None else int(nb),
-        )
-    if method == "POST" and path == "/scd2/snapshot":
-        # a pure read despite the body-carrying POST (the /matrix
-        # convention) — deliberately NOT in _MUTATING_PATHS
-        for req in ("path", "ts"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        users = body.get("users")
-        if users is not None and not isinstance(users, list):
-            # a scalar string "12" would iterate per-CHARACTER into
-            # [1, 2] and silently answer for the wrong users
-            raise ValueError('"users" must be a JSON array of ids')
-        # ids pass through UNTYPED (advice r13: int(u) here made
-        # string-keyed stores unqueryable and silently truncated 1.9
-        # to user 1) — scd2_snapshot_at coerces them from the store's
-        # own persisted key_type and rejects non-integral numerics
-        return 200, api.scd2_snapshot(
-            body["path"], body["ts"],
-            users=users,
-            limit=int(body.get("limit", 1000)),
-        )
-    if method == "POST" and path == "/scd2/recover":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.scd2_recover_store(body["path"])
-    if method == "POST" and path == "/index/recluster":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.index_recluster(
-            body["path"],
-            threshold=float(body.get("threshold", 3.0)),
-            n_cells=(
-                int(body["n_cells"]) if "n_cells" in body else None
-            ),
-            train_fraction=float(body.get("train_fraction", 1.0)),
-        )
-    if method == "POST" and path == "/psi/repin":
-        for req in ("dataset", "time", "value", "path", "end"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 201, api.psi_repin(
-            body["dataset"], body["time"], body["value"], body["path"],
-            end=body["end"], start=body.get("start"),
-        )
-    if method == "GET" and path == "/psi/status":
-        if "path" not in query:
-            raise ValueError("missing query parameter 'path'")
-        return 200, api.psi_status(query["path"])
-    if method == "GET" and path == "/psi/drift":
-        for req in ("dataset", "time", "value", "path"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.psi_drift(
-            query["dataset"], query["time"], query["value"], query["path"]
-        )
-    if method == "GET" and path == "/dedup":
-        for req in ("dataset", "id", "text"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.dedup(
-            query["dataset"], query["id"], query["text"],
-            method=query.get("method", "exact"),
-            threshold=float(query.get("threshold", 0.5)),
-            limit=int(query.get("limit", 1000)),
-        )
-    if method == "GET" and path == "/assign":
-        for req in ("dataset", "id", "vector", "centroids"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.assign(
-            query["dataset"], query["id"], query["vector"],
-            centroid_ids=[int(x) for x in query["centroids"].split(",") if x],
-            limit=int(query.get("limit", 1000)),
-        )
-    if method == "GET" and path == "/knn_graph":
-        for req in ("dataset", "id", "vector"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.knn_graph(
-            query["dataset"], query["id"], query["vector"],
-            k=int(query.get("k", 5)),
-            limit=int(query.get("limit", 100)),
-        )
-    if method == "GET" and path == "/transitions":
-        for req in ("dataset", "user", "event", "time", "order"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.transitions(
-            query["dataset"], query["user"], query["event"],
-            query["time"], query["order"],
-        )
-    if method == "GET" and path == "/stationary":
-        for req in ("dataset", "user", "event", "time", "order"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.stationary(
-            query["dataset"], query["user"], query["event"],
-            query["time"], query["order"],
-            n_iter=int(query.get("n_iter", "50")),
-        )
-    if method == "GET" and path == "/attribution":
-        for req in ("dataset", "user", "event", "time", "order", "target"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.attribution(
-            query["dataset"], query["user"], query["event"],
-            query["time"], query["order"], query["target"],
-        )
-    if method == "GET" and path == "/attribution_multi":
-        for req in ("dataset", "user", "event", "time", "order", "target"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.attribution_multi(
-            query["dataset"], query["user"], query["event"],
-            query["time"], query["order"], query["target"],
-            horizon_days=int(query.get("horizon_days", 30)),
-        )
-    if method == "GET" and path == "/bpe":
-        for req in ("dataset", "id", "text"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.bpe_train(
-            query["dataset"], query["id"], query["text"],
-            n_merges=int(query.get("n_merges", 24)),
-            vocab_cap=int(query.get("vocab_cap", 5000)),
-        )
-    if method == "GET" and path == "/pagerank":
-        for req in ("dataset", "src", "dst"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.pagerank(
-            query["dataset"], query["src"], query["dst"],
-            weight=query.get("weight"),
-            damping=float(query.get("damping", 0.85)),
-            n_iter=int(query.get("n_iter", 20)),
-            limit=int(query.get("limit", 100)),
-        )
-    if method == "GET" and path == "/kmeans":
-        for req in ("dataset", "id", "vector"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.kmeans(
-            query["dataset"], query["id"], query["vector"],
-            k=int(query.get("k", 8)),
-            n_iter=int(query.get("n_iter", 10)),
-            tol=float(query.get("tol", 1e-4)),
-            include_centroids=query.get("centroids", "0")
-            in ("1", "true", "yes"),
-        )
-    if method == "GET" and path == "/pack":
-        for req in ("dataset", "id", "text"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.pack(
-            query["dataset"], query["id"], query["text"],
-            capacity=int(query.get("capacity", 2048)),
-            limit=int(query.get("limit", 1000)),
-            tokenizer=query.get("tokenizer", "ws"),
-        )
-    if method == "GET" and path == "/xcorr":
-        for req in ("dataset", "time", "x", "y"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.cross_correlation(
-            query["dataset"], query["time"], query["x"], query["y"],
-            max_lag=int(query.get("max_lag", 3)),
-            grain=query.get("grain", "day"),
-            fill_gaps=query.get("fill_gaps", "").lower() in ("1", "true"),
-        )
-    return 404, {"error": f"no route: {method} {path}"}
+    route = _TABLE.get((method, path))
+    if route is None:
+        return 404, {"error": f"no route: {method} {path}"}
+    text = method == "GET"
+    res = getattr(api, route.call)(**bind(route, query if text else body, text))
+    if route.status == 201 and res.get("rebuilt"):
+        return 200, res
+    return route.status, res
 
 
 def make_server(
@@ -740,6 +430,21 @@ def make_server(
             self.end_headers()
             self.wfile.write(raw)
 
+        def _body(self) -> dict[str, Any]:
+            raw = self.headers.get("Content-Length") or "0"
+            if not raw.isdigit():  # "abc" or "-1": never block on read(-1)
+                raise ValueError(f"invalid Content-Length: {raw!r}")
+            length = int(raw)
+            if not length:
+                return {}
+            try:
+                body = json.loads(self.rfile.read(length))
+            except ValueError:
+                raise ValueError("request body is not JSON") from None
+            if not isinstance(body, dict):
+                raise ValueError("request body must be a JSON object")
+            return body
+
         def _handle(self, method: str) -> None:
             parsed = urlparse(self.path)
             refused = _authorize(method, parsed.path, self.headers, auth_token)
@@ -747,16 +452,10 @@ def make_server(
                 self._respond(*refused)
                 return
             query = {k: v[0] for k, v in parse_qs(parsed.query).items()}
-            body: dict[str, Any] = {}
-            length = int(self.headers.get("Content-Length") or 0)
-            if length:
-                try:
-                    body = json.loads(self.rfile.read(length))
-                except json.JSONDecodeError:
-                    self._respond(400, {"error": "request body is not JSON"})
-                    return
             try:
-                status, payload = _route(api, method, parsed.path, query, body)
+                status, payload = _route(
+                    api, method, parsed.path, query, self._body()
+                )
             except KeyError as e:
                 self._respond(404, {"error": str(e)})
             except (ValueError, TypeError) as e:

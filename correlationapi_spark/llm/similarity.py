@@ -3597,15 +3597,13 @@ def pq_probe_stored(
             return spark.createDataFrame(
                 [], "probe_id long, vec_id long, l2 double, rank int"
             )
-        vids = sorted({int(r.vec_id) for r in crows})
-        vmap = {
-            int(r.vec_id): [float(x) for x in r.v]
-            for r in raw.filter(F.col("vec_id").isin(vids))
-            .select("vec_id", "v").collect()
-        }
+        vmap = _refine_gather(raw, sorted({int(r.vec_id) for r in crows}))
         pmap = {
             int(r.vec_id): [float(x) for x in r.v] for r in probe_rows
         }
+        # a candidate whose raw vector the gather missed (a torn read on
+        # this lock-free path) is skipped, as the join branch's inner
+        # join drops it — never a bare KeyError (a 404 at the listener)
         scored_local = _one_slice_df(
             spark,
             [
@@ -3615,6 +3613,7 @@ def pq_probe_stored(
                     _seq_l2(pmap[int(r.probe_id)], vmap[int(r.vec_id)]),
                 )
                 for r in crows
+                if int(r.vec_id) in vmap
             ],
             "probe_id long, vec_id long, _l2raw double",
         )
@@ -3658,6 +3657,16 @@ def pq_probe_stored(
             F.col("rn").cast("int").alias("rank"),
         )
     )
+
+
+def _refine_gather(raw: DataFrame, vids: list) -> dict:
+    """{vec_id: raw vector} of the refine candidates: one collect through
+    the pushed vec_id IN scan."""
+    return {
+        int(r.vec_id): [float(x) for x in r.v]
+        for r in raw.filter(F.col("vec_id").isin(vids))
+        .select("vec_id", "v").collect()
+    }
 
 
 def _seq_l2(a, b) -> float:

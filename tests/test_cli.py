@@ -695,3 +695,49 @@ def test_cli_scd2_merge_into_and_recover(spark, capsys, tmp_path):
         "--path", str(tmp_path / "nostore"),
     ])
     assert rc == 2 and "no SCD2 store" in res["error"]
+
+
+def test_cli_commands_come_from_the_route_table():
+    """One command per route path (GET and POST /similar share one),
+    so no two paths collapse onto one command name."""
+    from correlationapi_spark.__main__ import _commands
+    from correlationapi_spark.http_api import ROUTES
+
+    commands = _commands()
+    assert len(commands) == len({r.path for r in ROUTES})
+    assert {r.call for r in commands.values()} == {r.call for r in ROUTES}
+    assert not {"query", "keys", "serve"} & set(commands)
+
+
+def test_cli_lagged_fill_gaps_matches_route(spark, capsys):
+    from correlationapi_spark.api import CorrelationAPI
+    from correlationapi_spark.http_api import _route
+
+    events = os.path.join(SF_SMOKE, "events.parquet")
+    rc, res = _run(capsys, [
+        "lagged", "--data", events, "--time", "ts", "--value", "value",
+        "--grain", "hour", "--fill-gaps",
+    ])
+    assert rc == 0 and res["fill_gaps"] is True
+    api = CorrelationAPI(spark)
+    api.register_dataset("ds", events)
+    status, want = _route(api, "GET", "/lagged", {
+        "dataset": "ds", "time": "ts", "value": "value", "grain": "hour",
+        "fill_gaps": "1",
+    }, {})
+    assert status == 200 and res == json.loads(json.dumps(want))
+
+
+def test_cli_engine_error_is_one_json_line(capsys, monkeypatch):
+    """Every command shares one error mapping: an engine failure on a
+    store command exits 3 with one JSON line, not a traceback."""
+    from correlationapi_spark.api import CorrelationAPI
+
+    def boom(self, path):
+        raise RuntimeError("store unreadable")
+
+    monkeypatch.setattr(CorrelationAPI, "index_status", boom)
+    rc = main(["index-status", "--path", "/nowhere"])
+    out = capsys.readouterr().out
+    assert rc == 3 and out.count("\n") == 1
+    assert json.loads(out) == {"error": "RuntimeError: store unreadable"}

@@ -64,21 +64,24 @@ def test_oracle_type_rule_documented_and_enforced():
 
 def test_every_http_route_documented():
     """r13 verdict item 7: README lagged the service surface for two
-    rounds because nothing pinned it. The route inventory is extracted
-    from the handler source itself (the `path == "/x"` dispatch), so a
-    route added without documenting it in BOTH the http_api module
-    docstring and README fails here, not at review time."""
-    import re
+    rounds because nothing pinned it. The route inventory is the
+    listener's own route table (plus its special-cased /health and
+    /datasets), so a route added without documenting it in BOTH the
+    http_api module docstring and README fails here, not at review
+    time; every mutating route must also be named in the docstring's
+    mutation-guard paragraph."""
+    from correlationapi_spark.http_api import ROUTES
 
     src = _read(os.path.join("correlationapi_spark", "http_api.py"))
-    routes = sorted(
-        set(re.findall(r'path == "(/[^"]+)"', src))
-        | set(re.findall(r'path\.startswith\("(/[^"]+?)/?"', src))
-    )
-    assert len(routes) >= 50, routes  # the dispatch regex still matches
+    routes = sorted({r.path for r in ROUTES} | {"/health", "/datasets"})
+    assert len(routes) >= 50, routes
     docstring = src.split('"""')[1]
     readme = _read("README.md")
     missing_doc = [r for r in routes if r not in docstring]
     missing_readme = [r for r in routes if r not in readme]
     assert not missing_doc, f"routes absent from http_api doc: {missing_doc}"
     assert not missing_readme, f"routes absent from README: {missing_readme}"
+    guard = docstring[docstring.index("Mutation guard"):]
+    guard = guard[:guard.index("\n\n")]
+    unguarded = [r.path for r in ROUTES if r.mutates and r.path not in guard]
+    assert not unguarded, f"mutating routes absent from the guard: {unguarded}"

@@ -1077,3 +1077,125 @@ def test_auth_non_ascii_token_answers_401_not_connection_reset(base_url):
     with pytest.raises(urllib.error.HTTPError) as exc:
         urllib.request.urlopen(req)
     assert exc.value.code == 401
+
+
+# ------------------------------------------------------------ request bodies
+
+
+def _raw_request(base_url: str, head: str, body: bytes = b""):
+    """Send hand-written request bytes; (status, JSON payload). The read
+    times out instead of hanging if the server never answers."""
+    import socket
+    from urllib.parse import urlparse
+
+    u = urlparse(base_url)
+    with socket.create_connection((u.hostname, u.port), timeout=30) as s:
+        s.sendall(head.replace("\n", "\r\n").encode() + b"\r\n" + body)
+        data = b""
+        while chunk := s.recv(65536):
+            data += chunk
+    status = int(data.split(b" ", 2)[1])
+    return status, json.loads(data.split(b"\r\n\r\n", 1)[1])
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_malformed_content_length_answers_400(base_url, length):
+    """A garbled length used to drop the connection ("abc") or block the
+    handler on read(-1) ("-1"); both are a 400 JSON answer now."""
+    status, payload = _raw_request(
+        base_url,
+        f"POST /matrix HTTP/1.1\nHost: x\nContent-Length: {length}\n"
+        "Content-Type: application/json\n",
+        b'{"dataset": "lineitem"}',
+    )
+    assert status == 400 and "Content-Length" in payload["error"]
+
+
+def test_non_object_body_answers_400(base_url):
+    body = b"[1, 2]"
+    status, payload = _raw_request(
+        base_url,
+        f"POST /matrix HTTP/1.1\nHost: x\nContent-Length: {len(body)}\n"
+        "Content-Type: application/json\n",
+        body,
+    )
+    assert status == 400
+    assert payload == {"error": "request body must be a JSON object"}
+
+
+# ---------------------------------------------------------------- route table
+
+
+class _Spy:
+    """A served object with no real signature (like a tracing proxy):
+    every method echoes its keyword arguments."""
+
+    def __getattr__(self, name):
+        return lambda **kw: {"call": name, "kwargs": kw}
+
+
+def _sample(hint, text: bool):
+    import typing
+
+    args = [a for a in typing.get_args(hint) if a is not type(None)]
+    if typing.get_origin(hint) is list or hint is list:
+        return "1,2" if text else [_sample((args or [str])[0], False)]
+    if len(args) == 1:
+        return _sample(args[0], text)
+    if len(args) > 1:  # str | list[str]
+        return "c"
+    return {bool: "1", int: "3", float: "0.5"}.get(hint, "v")
+
+
+def test_route_table_binds_every_parameter():
+    """Every entry resolves to a CorrelationAPI method, renames only
+    real parameters, binds every parameter without a default (and each
+    one's absence is today's 400 message), and drives _is_mutation."""
+    import inspect
+
+    from correlationapi_spark.http_api import ROUTES, _is_mutation, params
+
+    assert len({(r.method, r.path) for r in ROUTES}) == len(ROUTES)
+    for r in ROUTES:
+        fn = getattr(CorrelationAPI, r.call)
+        names = list(inspect.signature(fn).parameters)[1:]
+        assert set(r.wire.values()) <= set(names), r
+        bound = params(r)
+        wires = [w for _, w, _, _ in bound]
+        assert len(set(wires)) == len(wires) and set(r.need) <= set(wires), r
+        assert _is_mutation(r.method, r.path) == r.mutates, r
+
+        text = r.method == "GET"
+        given = {w: _sample(h, text) for _, w, h, _ in bound}
+        query, body = (given, {}) if text else ({}, given)
+        status, res = _route(_Spy(), r.method, r.path, query, body)
+        assert res["call"] == r.call and set(res["kwargs"]) == set(names), r
+
+        required = [
+            w for _, w, _, d in bound
+            if d is inspect.Parameter.empty or w in r.need
+        ]
+        for w in required:
+            part = {k: v for k, v in given.items() if k != w}
+            query, body = (part, {}) if text else ({}, part)
+            msg = (f"missing query parameter '{w}'" if text
+                   else f'body must contain "{w}"')
+            with pytest.raises(ValueError) as exc:
+                _route(_Spy(), r.method, r.path, query, body)
+            assert str(exc.value) == msg, r
+
+
+def test_body_list_parameters_must_be_lists():
+    """Query strings comma-split list parameters; JSON bodies must send
+    real arrays (a scalar "12" would otherwise become ids 1 and 2)."""
+    status, res = _route(
+        _Spy(), "GET", "/assign",
+        {"dataset": "d", "id": "i", "vector": "v", "centroids": "0, 2,"}, {},
+    )
+    assert res["kwargs"]["centroid_ids"] == [0, 2]
+    with pytest.raises(ValueError, match="JSON array"):
+        _route(_Spy(), "POST", "/index/delete", {},
+               {"path": "p", "ids": "12"})
+    status, res = _route(_Spy(), "POST", "/scd2/snapshot", {},
+                         {"path": "p", "ts": "t", "users": ["a", 3]})
+    assert res["kwargs"]["users"] == ["a", 3]  # ids pass through untyped

@@ -2180,6 +2180,36 @@ def test_pq_refine_driver_matches_join(spark, tmp_path, monkeypatch):
         # l2 compared as exact doubles
         assert sorted(map(tuple, driver)) == sorted(map(tuple, join)), kw
 
+    # torn read: the collected gather misses one candidate's raw vector.
+    # The collect branch skips it, as the join branch's inner join drops
+    # a missing row: the answer is the join's full candidate list (k =
+    # refine) without that id, re-ranked, cut at k
+    monkeypatch.setattr(sim, "_PQ_REFINE_PUSHDOWN_IDS", 0)
+    cands = pq_probe_stored(
+        spark, path, list(range(5)), k=10, refine=10
+    ).collect()
+    monkeypatch.setattr(sim, "_PQ_REFINE_PUSHDOWN_IDS", 65536)
+    gone = next(r.vec_id for r in cands if r.probe_id == 0 and r.rank == 1)
+    gather = sim._refine_gather
+    monkeypatch.setattr(
+        sim, "_refine_gather",
+        lambda raw, vids: {
+            i: v for i, v in gather(raw, vids).items() if i != gone
+        },
+    )
+    got = pq_probe_stored(
+        spark, path, list(range(5)), k=3, refine=10
+    ).collect()
+    want = []
+    for p in sorted({r.probe_id for r in cands}):
+        rest = sorted(
+            (r.l2, r.vec_id) for r in cands
+            if r.probe_id == p and r.vec_id != gone
+        )[:3]
+        want += [(p, v, l2, i + 1) for i, (l2, v) in enumerate(rest)]
+    assert sorted(map(tuple, got)) == sorted(want)
+    assert all(r.vec_id != gone for r in got)
+
 
 def test_pq_attachment_survives_maintenance(spark, tmp_path):
     """The PQ attachment's maintenance contract: delete+compact carry
